@@ -133,8 +133,13 @@ def _urljoin(base: str, url: str) -> str:
 
 @lru_cache(maxsize=4096)
 def _resolve_url(base: str, val: str) -> str:
-    """Memoized absUrl resolution (same base repeats for every node)."""
-    resolved = _urljoin(base, val) if base else val
+    """Memoized absUrl resolution (same base repeats for every node).
+    A URL ``urlparse`` rejects (e.g. an unclosed IPv6 bracket) resolves
+    to '', as jsoup's ``absUrl`` does on ``MalformedURLException``."""
+    try:
+        resolved = _urljoin(base, val) if base else val
+    except ValueError:
+        return ""
     return resolved if _has_scheme(resolved) else ""
 
 #: memo for contains_markup's per-tag needle verdict (bounded; see use)

@@ -298,6 +298,18 @@ def initialize_node(node: Element, variant: P.Variant) -> None:
 # the kernel
 # --------------------------------------------------------------------------
 
+#: the closed set of document statuses; a document whose processing
+#: raised anything else is ``error:<ExceptionType>`` (see ``doc_status``)
+STATUSES = frozenset({"ok", "oversize", "recursion"})
+
+
+def doc_status(exc: Exception) -> str:
+    """The status of a document whose processing raised ``exc``."""
+    if isinstance(exc, RecursionError):
+        return "recursion"
+    return f"error:{type(exc).__name__}"
+
+
 @dataclass
 class ExtractionResult:
     spans: list[tuple]  # (kind, text, media_ref, offset)
@@ -1195,15 +1207,14 @@ def debug_scored_nodes(
     variant: str = "img",
 ) -> list[tuple[str, str, str, int]]:
     """S6: the scored-DOM intermediate as rows (tag, class, id, score),
-    captured at the reference's debug-dump point (pre-scaling)."""
-    try:
-        kernel = ReadabilityKernel(html, base_uri, ref_date, variant)
-        kernel.collect_debug = True
-        kernel.prep_document()
-        kernel.grab_article(preserve_unlikely_candidates=False)
-        return kernel.debug_scores
-    except Exception:
-        return []
+    captured at the reference's debug-dump point (pre-scaling). Raises
+    on a document the kernel cannot process; ``scored_dom_nodes`` then
+    emits no rows for it."""
+    kernel = ReadabilityKernel(html, base_uri, ref_date, variant)
+    kernel.collect_debug = True
+    kernel.prep_document()
+    kernel.grab_article(preserve_unlikely_candidates=False)
+    return kernel.debug_scores
 
 
 def extract_document(
@@ -1242,7 +1253,5 @@ def extract_document(
             top_content_score=kernel.top_content_score,
             status="ok",
         )
-    except RecursionError:
-        return ExtractionResult(spans=[], status="oversize")
     except Exception as exc:  # per-doc isolation: one bad doc never kills a batch
-        return ExtractionResult(spans=[], status=f"error:{type(exc).__name__}")
+        return ExtractionResult(spans=[], status=doc_status(exc))

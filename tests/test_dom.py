@@ -81,6 +81,20 @@ def test_abs_url():
     assert img2.abs_url("src") == ""
 
 
+def test_abs_url_malformed_is_empty():
+    # urlparse rejects an unclosed IPv6 bracket; jsoup absUrl returns ""
+    # on MalformedURLException
+    doc = parse(
+        '<a href="http://[bad/x">x</a><img src="http://[bad/i.jpg"><a href="y">y</a>',
+        "http://host/2019/",
+    )
+    a_bad, a_ok = doc.body().get_elements_by_tag("a", include_self=False)
+    img = doc.body().get_elements_by_tag("img", include_self=False)[0]
+    assert a_bad.abs_url("href") == ""
+    assert img.abs_url("src") == ""
+    assert a_ok.abs_url("href") == "http://host/2019/y"
+
+
 def test_nbsp_reescapes():
     doc = parse("<p>a&nbsp;b<br>&nbsp;</p>")
     assert "&nbsp;" in doc.body().html()

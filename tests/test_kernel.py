@@ -1,6 +1,7 @@
 """Kernel quirk vectors (FIXTURES.md §3) — hand-computed expectations."""
 
 import math
+import sys
 
 from readabilityimproved_spark.dom import Element, parse
 from readabilityimproved_spark.kernel.readability import (
@@ -196,3 +197,32 @@ def test_duplicate_image_end_to_end():
     )
     result = extract_document(html, base_uri=BASE)
     assert "http://news.site/2019-06/18/photo2.jpg" not in result.images
+
+
+def test_malformed_img_url_keeps_article():
+    # one unparsable src (unclosed IPv6 bracket) resolves to '' like
+    # jsoup absUrl, instead of failing the whole document
+    paragraphs = "".join(
+        f"<p>word{i} lorem ipsum dolor sit amet, consectetur adipiscing elit, "
+        f"sed do eiusmod tempor incididunt ut labore.</p>"
+        for i in range(4)
+    )
+    html = f'<div class="article content">{paragraphs}<img src="http://[bad/i.jpg"></div>'
+    result = extract_document(html, base_uri=BASE)
+    assert result.status == "ok"
+    assert [s[0] for s in result.spans] == ["text"] * 4
+    assert result.images == []
+
+
+def test_deep_nesting_reports_recursion():
+    # at CPython's default limit (a Python worker's); other tests may
+    # leave the process limit raised
+    limit = sys.getrecursionlimit()
+    sys.setrecursionlimit(1000)
+    try:
+        for depth in (600, 5_000):
+            html = "<div>" * depth + "text" + "</div>" * depth
+            result = extract_document(html, base_uri=BASE)
+            assert (result.status, result.spans) == ("recursion", [])
+    finally:
+        sys.setrecursionlimit(limit)

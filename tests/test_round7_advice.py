@@ -69,40 +69,3 @@ def test_hash_split_rejects_quoted_names(spark):
     out = hash_split(df, {"train": 0.5, "test": 0.5})
     assert set(r["split"] for r in out.collect()) <= {"train", "test"}
 
-
-def test_outlink_batches_chunked_yields_identical_rows():
-    """Round-6 verdict item 7: the per-batch link buffer flushes in
-    bounded chunks. Rows, order and values must be identical to one
-    monolithic yield; peak buffered rows must stay bounded."""
-    import pandas as pd
-
-    from readabilityimproved_spark.operators import links as L
-
-    def spans_for(i):
-        n = 40
-        body = "".join(
-            f'<a href="http://h{i}.example.com/p{j}">a{j}</a>'
-            for j in range(n)
-        )
-        return [{"kind": "html", "text": body, "media_ref": None, "offset": 0}]
-
-    pdf = pd.DataFrame(
-        {"doc_id": [f"d{i}" for i in range(100)],
-         "spans": [spans_for(i) for i in range(100)]}
-    )
-
-    old_chunk = L._OUTLINK_CHUNK_ROWS
-    try:
-        L._OUTLINK_CHUNK_ROWS = 100  # force many flushes (4000 links total)
-        chunks = list(L._outlink_batches(iter([pdf]), max_links=10_000))
-        assert len(chunks) > 10  # actually chunked
-        assert max(len(c) for c in chunks) <= 100 + 40  # chunk + one doc
-        got = pd.concat(chunks, ignore_index=True)
-    finally:
-        L._OUTLINK_CHUNK_ROWS = old_chunk
-    want = pd.concat(
-        list(L._outlink_batches(iter([pdf]), max_links=10_000)),
-        ignore_index=True,
-    )
-    pd.testing.assert_frame_equal(got, want)
-    assert len(want) == 4000

@@ -103,11 +103,23 @@ def test_pipeline_end_to_end_and_resume(spark, corpus_path, tmp_path):
 
 def test_oversize_guard(spark):
     from readabilityimproved_spark.operators.extract import MAX_HTML_BYTES
+    from readabilityimproved_spark.operators.links import extract_outlinks
+    from readabilityimproved_spark.operators.textops import (
+        extract_pub_dates,
+        extract_titles,
+        scored_dom_nodes,
+    )
 
-    big = "x" * (MAX_HTML_BYTES + 10)
+    big = "<title>t</title><a href='http://x/'>x</a>" + "x" * MAX_HTML_BYTES
     df = spark.createDataFrame(
         [("huge", [{"kind": "html", "text": big, "media_ref": None, "offset": 0}])],
         "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
     rows = extract_spans(df).collect()
     assert rows[0]["status"] == "oversize" and rows[0]["n_spans"] == 0
+    # the page is never parsed: one null row for titles and dates, no
+    # rows for links and scored nodes
+    assert [tuple(r) for r in extract_titles(df).collect()] == [("huge", None)]
+    assert [tuple(r) for r in extract_pub_dates(df).collect()] == [("huge", None)]
+    assert extract_outlinks(df).collect() == []
+    assert scored_dom_nodes(df).collect() == []
